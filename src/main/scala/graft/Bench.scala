@@ -177,52 +177,41 @@ object Bench {
     */
   private[graft] def skewSideline(spark: SparkSession): Seq[(String, Double)] = {
     import spark.implicits._
-    import graft.operators.{Dedup, Similarity}
-    // failure-path hygiene: the catch below zeroes the metrics, but the
-    // corpus-sized persisted tables (and Dedup's tracked caches) must
-    // not stay pinned in the shared query session either way — the
-    // timed queries run in this same session
-    val persisted =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    import graft.operators.{CacheRegistry, Dedup, Similarity}
+    // each corpus and the operators' tables live in their own cache
+    // scope: released as soon as its volumes are counted, and on the
+    // failure path too — the timed queries run in this same session
     try {
-      val vecs = spark.range(SkewN).map(i => (i, skewVec(i)))
-        .toDF("vec_id", "embedding")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      persisted += vecs
-      def s3Cands(cap: Int): Double =
-        Similarity.candidatePairs(vecs, "embedding", "vec_id",
-          SkewPlanes, tables = 8, maxBucket = cap).count().toDouble
-      val s3Off = s3Cands(0)
-      val s3On = s3Cands(500)
-      vecs.unpersist()
-      val sigs = spark.range(100000L).map(i => (i, skewSig(i)))
-        .toDF("doc_id", "sig")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      persisted += sigs
-      def d4Cands(cap: Int): Double =
-        Dedup.simhashCandidates(sigs, maxHamming = 3, maxBucket = cap)
-          .count().toDouble
-      val d4Off = d4Cands(0)
-      val d4On = d4Cands(500)
-      sigs.unpersist()
-      Dedup.releaseCaches()
-      val d2docs = spark.range(D2Hub + D2Chain + D2Big)
-        .map(i => (i, d2SkewText(i)))
-        .toDF("doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      persisted += d2docs
-      d2docs.count()
-      def d2Cands(prefix: Boolean, positional: Boolean): Double = {
-        val c = Dedup.jaccardCandidates(d2docs, "text", "doc_id",
-          n = 3, minJ = 0.5, prefixFilter = prefix,
-          positionalFilter = positional).count().toDouble
-        Dedup.releaseCaches()
-        c
+      val (s3Off, s3On) = CacheRegistry.scoped {
+        val vecs = CacheRegistry.materialize(spark.range(SkewN)
+          .map(i => (i, skewVec(i))).toDF("vec_id", "embedding"))
+        def s3Cands(cap: Int): Double =
+          Similarity.candidatePairs(vecs, "embedding", "vec_id",
+            SkewPlanes, tables = 8, maxBucket = cap).count().toDouble
+        (s3Cands(0), s3Cands(500))
       }
-      val d2None = d2Cands(prefix = false, positional = false)
-      val d2Prefix = d2Cands(prefix = true, positional = false)
-      val d2Full = d2Cands(prefix = true, positional = true)
-      d2docs.unpersist()
+      val (d4Off, d4On) = CacheRegistry.scoped {
+        val sigs = CacheRegistry.materialize(spark.range(100000L)
+          .map(i => (i, skewSig(i))).toDF("doc_id", "sig"))
+        def d4Cands(cap: Int): Double =
+          Dedup.simhashCandidates(sigs, maxHamming = 3, maxBucket = cap)
+            .count().toDouble
+        (d4Cands(0), d4Cands(500))
+      }
+      val (d2None, d2Prefix, d2Full) = CacheRegistry.scoped {
+        val d2docs = CacheRegistry.materialize(
+          spark.range(D2Hub + D2Chain + D2Big)
+            .map(i => (i, d2SkewText(i))).toDF("doc_id", "text"))
+        def d2Cands(prefix: Boolean, positional: Boolean): Double =
+          CacheRegistry.scoped {
+            Dedup.jaccardCandidates(d2docs, "text", "doc_id",
+              n = 3, minJ = 0.5, prefixFilter = prefix,
+              positionalFilter = positional).count().toDouble
+          }
+        (d2Cands(prefix = false, positional = false),
+          d2Cands(prefix = true, positional = false),
+          d2Cands(prefix = true, positional = true))
+      }
       Seq("skew_s3_candidates_nosplit" -> s3Off,
         "skew_s3_candidates_resplit" -> s3On,
         "skew_d4_candidates_nosplit" -> d4Off,
@@ -241,19 +230,11 @@ object Bench {
           "skew_d2_candidates_nofilter" -> 0.0,
           "skew_d2_candidates_prefix" -> 0.0,
           "skew_d2_candidates_full" -> 0.0)
-    } finally {
-      persisted.foreach(df =>
-        try df.unpersist()
-        catch { case scala.util.control.NonFatal(_) => () })
-      graft.operators.Dedup.releaseCaches()
     }
   }
 
   private def session(cores: Int): SparkSession =
     sessionFor(s"local[$cores]", cores * 2)
-
-  /** Dev-probe access to the bench's session shape (graft.RawScale). */
-  private[graft] def sessionForDev(cores: Int): SparkSession = session(cores)
 
   private def sessionFor(master: String, parts: Int,
       splitBytes: Long = 8L * 1024 * 1024): SparkSession = {
@@ -312,7 +293,7 @@ object Bench {
   }
 
   /** Materialize the bench corpus parquet once (untimed setup). */
-  private[graft] def ensureCorpus(): Unit = {
+  private def ensureCorpus(): Unit = {
     if (Files.exists(Paths.get(CorpusDir, "_SUCCESS"))) {
       val s = session(32)
       val ok = try s.read.parquet(CorpusDir).count() == ExtractDocs
@@ -334,7 +315,7 @@ object Bench {
   }
 
   /** One timed extraction run (docs/sec) at a core count. */
-  private[graft] def extractionTrials(cores: Int, trials: Int): Seq[Double] =
+  private def extractionTrials(cores: Int, trials: Int): Seq[Double] =
     extractionTrialsOn(cores, trials, CorpusDir, ExtractDocs)
 
   private def extractionTrialsOn(cores: Int, trials: Int, dir: String,
@@ -736,68 +717,63 @@ object Bench {
     // keep-canonical anti-join over d5's clusters. Every stage of the
     // pairs → clusters → dedup pipeline is billed on exactly one line of
     // the total.
+    import graft.operators.{CacheRegistry, Dedup}
     var sharedPairs: Option[org.apache.spark.sql.DataFrame] = None
     var sharedClusters: Option[org.apache.spark.sql.DataFrame] = None
+    // the pair build has its own cache scope: jaccardPairs' shingle and
+    // token intermediates are dead weight once the pair table is
+    // persisted, so they are released before d5's/d6's timed region
     def pairsOnce(): org.apache.spark.sql.DataFrame =
-      sharedPairs.getOrElse {
+      sharedPairs.getOrElse(CacheRegistry.scoped {
         val p = SparkEntry.dupPairs(spark, sfDir)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         p.count()
         sharedPairs = Some(p)
         p
-      }
+      })
+    // one cache scope per query, closed after the timer stops (untimed
+    // release), so 50+ queries in one session cannot accumulate cached
+    // blocks
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      // the whole special case is guarded like every other query: a
-      // failed materialization must cost a zeroed line, not the run
-      if (name == "d5_dup_clusters") {
-        try {
-          val pairs = pairsOnce() // untimed: billed on d2's line
-          // untimed: the pair table itself is persisted in sharedPairs;
-          // jaccardPairs' shingle/token intermediates in the registry
-          // are dead weight once pairs materialize — drop them BEFORE
-          // the timed region, not after d7's else branch finally runs
-          graft.operators.Dedup.releaseCaches()
-          val t0 = System.nanoTime()
+      CacheRegistry.scoped {
+        // the whole special case is guarded like every other query: a
+        // failed materialization must cost a zeroed line, not the run
+        if (name == "d5_dup_clusters") {
           try {
-            val cl = graft.operators.Dedup.dupClustersLargeStar(pairs)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            cl.write.format("noop").mode("overwrite").save()
-            sharedClusters = Some(cl)
-          } catch { case _: Throwable => () }
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.operators.Dedup.releaseCaches() // untimed, as in else
-          name -> dt
-        } catch { case _: Throwable => name -> 0.0 }
-      } else if (name == "d6_dedup_corpus") {
-        try {
-          val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-          val pairs = pairsOnce() // fallback input if d5's line failed
-          graft.operators.Dedup.releaseCaches() // untimed (see d5)
-          val t0 = System.nanoTime()
+            val pairs = pairsOnce() // untimed: billed on d2's line
+            val t0 = System.nanoTime()
+            try {
+              val cl = Dedup.dupClustersLargeStar(pairs)
+                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              cl.write.format("noop").mode("overwrite").save()
+              sharedClusters = Some(cl)
+            } catch { case _: Throwable => () }
+            val dt = (System.nanoTime() - t0) / 1e9
+            name -> dt
+          } catch { case _: Throwable => name -> 0.0 }
+        } else if (name == "d6_dedup_corpus") {
           try {
-            graft.operators.Dedup.dedupCorpus(docs, "text", "doc_id",
-                precomputedPairs = Some(pairs),
-                precomputedClusters = sharedClusters)
-              .write.format("noop").mode("overwrite").save()
-          } catch { case _: Throwable => () }
+            val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+            val pairs = pairsOnce() // fallback input if d5's line failed
+            val t0 = System.nanoTime()
+            try {
+              Dedup.dedupCorpus(docs, "text", "doc_id",
+                  precomputedPairs = Some(pairs),
+                  precomputedClusters = sharedClusters)
+                .write.format("noop").mode("overwrite").save()
+            } catch { case _: Throwable => () }
+            val dt = (System.nanoTime() - t0) / 1e9
+            name -> dt
+          } catch { case _: Throwable => name -> 0.0 }
+        } else {
+          val t0 = System.nanoTime()
+          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
+          catch { case _: Throwable => () }
           val dt = (System.nanoTime() - t0) / 1e9
-          graft.operators.Dedup.releaseCaches()
           name -> dt
-        } catch { case _: Throwable => name -> 0.0 }
-      } else {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-        catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // untimed: drop the dedup/bloom operators' tracked caches so
-        // 50+ queries in one session cannot accumulate cached blocks
-        graft.operators.Dedup.releaseCaches()
-        graft.operators.Bloom.releaseCaches()
-        name -> dt
+        }
       }
     }
-    graft.operators.Dedup.releaseCaches()
-    graft.operators.Bloom.releaseCaches()
     sharedClusters.foreach(_.unpersist())
     sharedPairs.foreach(_.unpersist())
     val total = results.map(_._2).sum

@@ -2,7 +2,9 @@ package graft
 
 import graft.model._
 import graft.snapshot.SnapshotStore
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Dataset, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.util.CollectionAccumulator
 
 /** Resumable bucketed extraction job: the unit of checkpointing is a
   * bucket of the document space; each completed bucket is committed as a
@@ -32,7 +34,6 @@ object Job {
   def runResumable(spark: SparkSession, store: SnapshotStore,
       numBuckets: Int, bucketInput: Int => Dataset[Doc],
       cfg: ExtractConfig, maxBuckets: Int = -1): (Int, Long) = {
-    import spark.implicits._
     var ran = 0
     var docsWritten = 0L
     val done = store.committedBuckets
@@ -45,17 +46,36 @@ object Job {
         val acc = Pipeline.auditAccumulator(spark)
         val out = Pipeline.extract(bucketInput(b), cfg,
           snapshotId = optimisticSnapId, audit = acc)
-        val (dataDir, auditDir) = store.newWriteDirs(b)
-        out.write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
-        val audit = Pipeline.auditRows(acc)
-        spark.createDataset(audit).coalesce(1)
-          .write.mode(SaveMode.ErrorIfExists).parquet(auditDir)
-        val docs = audit.map(_.docs).sum
-        store.commit(b, dataDir, auditDir, docs, out.schema.json)
+        docsWritten += commitBucket(store, b, out, acc)
         ran += 1
-        docsWritten += docs
       }
     (ran, docsWritten)
+  }
+
+  /** Write one bucket's extracted rows and its audit rows into fresh
+    * dirs and commit both as a snapshot — the one write-and-commit path
+    * of the batch job and the streaming ingest. The manifest records the
+    * written table's schema and the rows actually written (after any
+    * dedup between extraction and write), counted by an observed metric
+    * on the write itself, so no second pass over the data. The metric
+    * rides the write's result stage, where Spark applies each
+    * partition's update once, so task retries do not inflate it.
+    * @return rows written
+    */
+  def commitBucket(store: SnapshotStore, bucket: Int,
+      out: Dataset[ExtractedDoc],
+      audit: CollectionAccumulator[AuditRow]): Long = {
+    val spark = out.sparkSession
+    import spark.implicits._
+    val (dataDir, auditDir) = store.newWriteDirs(bucket)
+    val written = Observation()
+    out.observe(written, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.ErrorIfExists).parquet(dataDir)
+    val rows = written.get("rows").asInstanceOf[Long]
+    spark.createDataset(Pipeline.auditRows(audit)).coalesce(1)
+      .write.mode(SaveMode.ErrorIfExists).parquet(auditDir)
+    store.commit(bucket, dataDir, auditDir, rows, out.schema.json)
+    rows
   }
 
   /** Read the committed table at a snapshot with schema evolution:
@@ -67,7 +87,7 @@ object Job {
     */
   def readData(spark: SparkSession, store: SnapshotStore,
       snapshotId: Option[Long] = None): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{DataType, StructType}
     val paths = store.dataPaths(snapshotId)
     require(paths.nonEmpty, s"no committed snapshot under ${store.root}")

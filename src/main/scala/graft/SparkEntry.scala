@@ -413,15 +413,14 @@ object SparkEntry {
     // Gopher-style repetition signals (duplicate-token fraction, top
     // 2-gram coverage, duplicate-3-gram fraction) — the repetition
     // filter every web-scale training pipeline runs before quality
-    // scoring. One narrow projection per row (sort_array + one
-    // aggregate pass per gram order inside repetitionStats): zero
-    // shuffle at any corpus size. The oracle recomputes the same
-    // counts the expensive way (unnest + GROUP BY per gram).
+    // scoring. One narrow per-row kernel: zero shuffle at any corpus
+    // size. The oracle recomputes the same counts the expensive way
+    // (unnest + GROUP BY per gram).
     "t7_repetition" -> ((s, dir) => {
       import s.implicits._
-      // JIT kernel form of repetitionStats (r06: the Column form's
-      // aggregate() HOFs are interpreted per gram — TextFunctionsSpec
-      // pins kernel == expression bit-for-bit on this corpus)
+      // JIT kernel (r06: the Column form's aggregate() HOFs are
+      // interpreted per gram — RepetitionPiiSpec pins the kernel to that
+      // expression bit-for-bit on this corpus)
       t(s, dir, "documents")
         .select($"doc_id", $"text")
         .as[(Long, String)]

@@ -21,17 +21,17 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
+    // one cache scope per query: each query's materialized tables are
+    // released once its output is written, so 50+ queries in one
+    // session do not accumulate cached blocks
     SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      graft.operators.CacheRegistry.scoped {
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
-      // drop the dedup operators' tracked multi-consumer caches between
-      // queries (each query rebuilds its own; 50+ queries in one
-      // session must not accumulate cached blocks)
-      graft.operators.Dedup.releaseCaches()
-      graft.operators.Bloom.releaseCaches()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

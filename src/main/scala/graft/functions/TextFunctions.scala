@@ -25,46 +25,17 @@ object TextFunctions {
   /** Token-window chunks — the sequence-prep step every training-data
     * pipeline runs before packing: greedy fixed-stride windows of
     * `maxTok` whitespace tokens, consecutive chunks sharing
-    * `maxTok - stride` tokens of overlap, the final window short.
-    * Returns an array of (chunk_idx, n_tok, chunk) structs the caller
-    * explodes; output per row is bounded by ceil(tokens/stride)
-    * elements and the whole thing is generator-side Catalyst (split →
-    * sequence → transform → slice) — codegen'd, no UDF, no shuffle,
-    * embarrassingly parallel at any corpus size.
-    */
-  def tokenChunks(c: Column, maxTok: Int, stride: Int,
-      withText: Boolean = true): Column = {
-    require(maxTok >= 1 && stride >= 1 && stride <= maxTok,
-      "need 1 <= stride <= maxTok")
-    val toks = split(trim(c), "\\s+")
-    val t = size(toks)
-    val n = when(t <= maxTok, lit(1))
-      .otherwise(ceil((t - maxTok).cast("double") / stride).cast("int")
-        + lit(1))
-    // consumers that only need the window grid (e.g. packing) skip the
-    // chunk strings entirely: the field is built inside this lambda, so
-    // generator pruning cannot remove it after the fact
-    transform(sequence(lit(0), n - 1), i => {
-      val idx = i.as("chunk_idx")
-      val nt = least(lit(maxTok), t - i * stride).as("n_tok")
-      if (withText)
-        struct(idx, nt,
-          array_join(slice(toks, i * stride + 1, lit(maxTok)), " ")
-            .as("chunk"))
-      else struct(idx, nt)
-    })
-  }
-
-  /** JIT kernel form of [[tokenChunks]] (r06: the generator-side HOF is
-    * interpreted per chunk and its expression tree dominates small-stage
-    * time; the kernel emits the same (chunk_idx, n_tok, chunk) rows from
-    * the same evaluation chain — UTF8String.trim, java regex "\\s+"
-    * split with limit -1 (leading/trailing empties kept, exactly like
-    * StringSplit), ceil over double for the window count, " "-joined
-    * slices). TextChunkSpec pins kernel == expression row-for-row.
-    * `withText = false` skips building the chunk strings (null third
-    * element) for grid-only consumers (c2/c3). Callers filter null text
-    * upstream, matching the expression queries.
+    * `maxTok - stride` tokens of overlap, the final window short. Emits
+    * (chunk_idx, n_tok, chunk) rows, at most ceil(tokens/stride) per
+    * text — a JIT kernel for typed mapPartitions (r06: the generator-side
+    * HOF form is interpreted per chunk and its expression tree dominated
+    * small-stage time). Evaluation chain: UTF8String.trim, java regex
+    * "\\s+" split with limit -1 (leading/trailing empties kept, exactly
+    * like StringSplit), ceil over double for the window count, " "-joined
+    * slices; TextChunkSpec pins it row-for-row against the Catalyst
+    * generator formulation. `withText = false` skips building the chunk
+    * strings (null third element) for grid-only consumers (c2/c3).
+    * Callers filter null text upstream.
     */
   def tokenChunksKernel(text: String, maxTok: Int, stride: Int,
       withText: Boolean = true): Iterator[(Int, Int, String)] = {
@@ -103,8 +74,6 @@ object TextFunctions {
     length(c) - length(regexp_replace(c, "[0-9]", ""))
   def punctChars(c: Column): Column =
     length(c) - length(regexp_replace(c, """[!-/:-@\[-`{-~]""", ""))
-  def spaceChars(c: Column): Column =
-    length(c) - length(regexp_replace(c, """\s""", ""))
 
   /** Deterministic quality score in [0,1]:
     * alpha_ratio * (1 - digit_ratio) * min(tokens/20, 1), rounded.
@@ -150,10 +119,11 @@ object TextFunctions {
   /** Word n-grams IN DOCUMENT ORDER from an already-bound token-array
     * column (a lambda variable — see orderedGrams for why binding
     * matters). Guard: sequence(0, -1) would COUNT DOWN in Spark, not be
-    * empty. Shared by wordShingles / orderedGrams / repetitionStats so
-    * the subtle construction lives in exactly one place.
+    * empty. Shared by wordShingles / orderedGrams (and the Column-form
+    * repetition reference in RepetitionPiiSpec) so the subtle
+    * construction lives in exactly one place.
     */
-  private def gramsFrom(toks: Column, n: Int): Column =
+  private[graft] def gramsFrom(toks: Column, n: Int): Column =
     when(size(toks) >= n,
       transform(sequence(lit(0), size(toks) - lit(n)),
         i => array_join(slice(toks, i + lit(1), lit(n)), " ")))
@@ -164,39 +134,6 @@ object TextFunctions {
     */
   def wordShingles(c: Column, n: Int): Column =
     array_distinct(orderedGrams(c, n))
-
-  /** Rolling-hash document fingerprint (polynomial hash over tokens) —
-    * order-sensitive counterpart of `fingerprint`. aggregate() HOF.
-    */
-  def rollingHash(c: Column): Column =
-    aggregate(tokens(c), lit(0L),
-      (acc, t) => acc * lit(1000003L) + xxhash64(t))
-
-  /** Sorted-run statistics over a string array: (maxrun, singles) =
-    * (largest multiplicity of any value, number of values occurring
-    * exactly once). One aggregate() pass over the SORTED array — per-row
-    * narrow Catalyst, no shuffle, so repetition scoring stays
-    * embarrassingly parallel at any corpus size (the oracle recomputes
-    * the same counts via unnest + GROUP BY, which is fine at gate scale
-    * but is exactly the per-gram shuffle this formulation avoids).
-    */
-  private def runStats(sorted: Column): Column =
-    aggregate(sorted,
-      struct(lit("").as("prev"), lit(0).as("run"),
-        lit(0).as("maxrun"), lit(0).as("singles")),
-      (st, g) => {
-        // run > 0 guards the first element against a legitimate "" gram
-        val same = st.getField("prev") === g && st.getField("run") > 0
-        val run = when(same, st.getField("run") + 1).otherwise(lit(1))
-        val singles = when(!same && st.getField("run") === 1,
-          st.getField("singles") + 1).otherwise(st.getField("singles"))
-        struct(g.as("prev"), run.as("run"),
-          greatest(st.getField("maxrun"), run).as("maxrun"),
-          singles.as("singles"))
-      },
-      st => struct(st.getField("maxrun").as("maxrun"),
-        (st.getField("singles") +
-          when(st.getField("run") === 1, 1).otherwise(0)).as("singles")))
 
   /** Word n-gram array IN DOCUMENT ORDER (not deduplicated — the
     * repetition counters need multiplicities, unlike `wordShingles`).
@@ -212,49 +149,14 @@ object TextFunctions {
   /** Gopher-style repetition signals (Rae et al. 2021 §A1.1, the
     * duplicate-line / top-n-gram / duplicate-n-gram family, re-expressed
     * over whitespace tokens since this corpus has no line structure):
-    *   n_tok         token count,
-    *   dup_tok_frac  fraction of token positions that repeat an earlier
-    *                 token value = 1 - distinct/total,
-    *   top2_frac     fraction of 2-gram positions covered by the single
-    *                 most frequent 2-gram,
-    *   dup3_frac     fraction of 3-gram positions whose gram occurs
-    *                 more than once.
-    * All four are one narrow projection per row (sort_array + one
-    * aggregate pass per gram order) — zero shuffle, codegen-friendly,
-    * so the filter runs at scan speed over any corpus size.
-    */
-  def repetitionStats(c: Column): Column = {
-    // ONE normalization+split per row: the token array is bound to a
-    // lambda variable and every counter (token stats + both gram
-    // orders) derives from the bound value — the naive form re-ran the
-    // regex normalization once per gram order (review finding).
-    val bound = transform(array(tokens(c)), toks => {
-      val nTok = size(toks)
-      val dupTok = when(nTok > 0,
-        (nTok - size(array_distinct(toks))).cast("double") /
-          nTok.cast("double")).otherwise(lit(0.0))
-      val r2 = runStats(sort_array(gramsFrom(toks, 2)))
-      val n2 = nTok - 1
-      val top2 = when(n2 > 0,
-        r2.getField("maxrun").cast("double") / n2.cast("double"))
-        .otherwise(lit(0.0))
-      val r3 = runStats(sort_array(gramsFrom(toks, 3)))
-      val n3 = nTok - 2
-      val dup3 = when(n3 > 0,
-        (n3 - r3.getField("singles")).cast("double") / n3.cast("double"))
-        .otherwise(lit(0.0))
-      struct(nTok.as("n_tok"),
-        round(dupTok, 6).as("dup_tok_frac"),
-        round(top2, 6).as("top2_frac"),
-        round(dup3, 6).as("dup3_frac"))
-    })
-    element_at(bound, 1)
-  }
-
-  /** JIT kernel form of [[repetitionStats]] for the hot scan path
-    * (house rule: per-row counting kernels run in typed mapPartitions —
-    * the Column form's aggregate() HOFs are interpreted per element).
-    * Bit-identical to the expression, step by step:
+    * (n_tok, dup_tok_frac = 1 - distinct/total tokens, top2_frac =
+    * share of 2-gram positions covered by the most frequent 2-gram,
+    * dup3_frac = share of 3-gram positions whose gram occurs more than
+    * once), each fraction rounded to 6 decimals. A JIT kernel for the
+    * hot scan path (house rule: per-row counting kernels run in typed
+    * mapPartitions — a Column form's aggregate() HOFs are interpreted
+    * per element), bit-identical to the sorted-run Catalyst
+    * formulation, step by step:
     * tokens = split(lower(regexp_replace(trim(text), "\\s+", " ")), " ")
     * via the SAME UTF8String trim/lower and java.util.regex calls
     * Catalyst makes; run statistics over sorted gram arrays are
@@ -262,7 +164,7 @@ object TextFunctions {
     * independent of sort order; round(_, 6) is HALF_UP over the
     * shortest decimal representation. Null text returns
     * (null, 0.0, 0.0, 0.0) exactly like the null-propagated expression.
-    * TextFunctionsSpec pins kernel == expression on the real corpus
+    * RepetitionPiiSpec pins kernel == expression on the real corpus
     * plus the degenerate shapes.
     */
   def repetitionStatsKernel(text: String): (Option[Int], Double, Double, Double) = {

@@ -85,15 +85,13 @@ object Bloom {
     * cross-joined broadcast — sizing the filter costs no driver action
     * and stays inside the plan. The committed fingerprint table feeds
     * three consumers (sizing, filter build, ground truth), so it is
-    * materialized through `caches` under the repo-wide recoverability
-    * contract ([[CacheRegistry]]) instead of being rescanned three
-    * times.
+    * materialized under the repo-wide recoverability contract
+    * ([[CacheRegistry]]) instead of being rescanned three times.
     */
   def membershipJoin(committed: DataFrame, arrivals: DataFrame,
       cContent: DataFrame => Column, aContent: DataFrame => Column,
-      idCol: String, bitsPerKey: Int = BitsPerKey, k: Int = K,
-      caches: CacheRegistry = sharedCaches): DataFrame = {
-    val cFp = caches.materialize(committed
+      idCol: String, bitsPerKey: Int = BitsPerKey, k: Int = K): DataFrame = {
+    val cFp = CacheRegistry.materialize(committed
       .select(TextFunctions.fingerprint(cContent(committed)).as("fp")))
     // floor at 1 bit: an EMPTY committed side must yield all-miss, not
     // an ANSI divide-by-zero in `% m` on the arrival probe
@@ -126,14 +124,6 @@ object Bloom {
         (col("nh") === col("np")).as("bloom_hit"),
         col("__dup").isNotNull.as("is_dup"))
   }
-
-  /** Default registry for standalone callers (see [[CacheRegistry]]
-    * for the scoping caveat); Verify/Bench release it between queries.
-    */
-  private val sharedCaches = new CacheRegistry
-
-  /** Unpersist the shared registry's tables after the consuming action. */
-  def releaseCaches(): Unit = sharedCaches.releaseAll()
 
   /** Build the real bitset from a one-column fingerprint DataFrame:
     * per-partition fold into a local Array[Long], then a bitwise-OR

@@ -2,12 +2,14 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
+import scala.collection.mutable.ArrayBuffer
 import scala.util.control.NonFatal
 
 /** Tracked multi-consumer materialization — THE cache-lifecycle policy
   * for every operator that computes an expensive table read by two or
   * more downstream consumers (Dedup's shingle/token tables,
-  * StreamExtract's per-batch committed-corpus projections).
+  * Similarity's bucket tables, the ingest dedup's committed-corpus
+  * projections).
   *
   * Policy (recoverability contract): `persist(MEMORY_AND_DISK)` + one
   * eager count(), NEVER localCheckpoint. Checkpoint blocks lost with a
@@ -18,49 +20,61 @@ import scala.util.control.NonFatal
   * is LAZY, so two sibling consumers of a cold cache would each
   * compute the kernel.
   *
-  * Persisted tables are tracked per-instance; the owner calls
-  * `releaseAll()` after the consuming action completes (results
-  * already computed or themselves persisted — a still-lazy downstream
-  * plan would recompute its inputs from lineage, correct but slow).
-  * Scope an instance to one unit of work: a micro-batch, a bench
-  * query, a notebook cell. A process-global instance shared by
-  * concurrent jobs would let one job's cleanup unpersist another's
-  * in-flight tables — exactly the double-compute the eager persist
-  * exists to prevent.
+  * Lifecycle: the code that runs the consuming action wraps it in
+  * [[scoped]] — one scope per query, micro-batch or notebook cell. The
+  * scope is tracked per thread (child threads do not inherit it), so
+  * two jobs sharing one SparkSession from different threads never
+  * unpersist each other's in-flight tables. On exit, normal or by
+  * exception, the scope unpersists everything materialized inside it.
+  * Outside any scope a table stays cached until the caller clears the
+  * session cache (`spark.catalog.clearCache()`).
   */
-final class CacheRegistry {
-  private val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+object CacheRegistry {
 
-  /** Persist + eagerly materialize `df`, tracking it for release. The
-    * table is tracked BEFORE the eager count: persist() registers the
-    * plan with the session's CacheManager immediately, so a count that
-    * throws (per-query failures are designed outcomes in Verify/Bench)
-    * must still leave the table releasable — tracked-after-count would
-    * leak a persisted-but-untracked table into the shared session for
-    * every query that follows.
+  private val current = new ThreadLocal[ArrayBuffer[DataFrame]]
+
+  /** Run `body` in a fresh scope and unpersist what it tracked once
+    * `body` returns or throws. Release runs AFTER the body, so the
+    * consuming action must complete inside it — a still-lazy plan
+    * returned out of the scope recomputes its inputs from lineage
+    * (correct but slow). Scopes nest: an inner scope releases only its
+    * own tables.
+    */
+  def scoped[T](body: => T): T = {
+    val outer = current.get
+    val tracked = ArrayBuffer.empty[DataFrame]
+    current.set(tracked)
+    try body
+    finally {
+      current.set(outer)
+      // unpersist failures (session already stopped) are swallowed —
+      // cleanup must never mask the body's own result or exception
+      tracked.foreach(df =>
+        try df.unpersist()
+        catch { case NonFatal(_) => () })
+    }
+  }
+
+  /** Persist + eagerly materialize `df`, tracking it in the current
+    * scope. The table is tracked BEFORE the eager count: persist()
+    * registers the plan with the session's CacheManager immediately, so
+    * a count that throws (per-query failures are designed outcomes in
+    * Verify/Bench) must still leave the table releasable.
     */
   def materialize(df: DataFrame,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
     val p = df.persist(level)
-    synchronized { tracked += p }
+    track(p)
     p.count()
     p
   }
 
-  /** Track an ALREADY-persisted (and already-materialized) table for
-    * release, without re-persisting — for operators that persist
-    * incrementally inside a loop and register only the survivor.
+  /** Track an ALREADY-persisted table in the current scope without
+    * re-persisting — for operators that persist incrementally inside a
+    * loop and register only what they return. A no-op outside a scope.
     */
-  def track(df: DataFrame): Unit = synchronized { tracked += df }
-
-  /** Unpersist every tracked table and forget it. Safe to call twice;
-    * unpersist failures (session already stopped) are swallowed —
-    * cleanup must never mask the job's own result.
-    */
-  def releaseAll(): Unit = synchronized {
-    tracked.foreach(df =>
-      try df.unpersist()
-      catch { case NonFatal(_) => () })
-    tracked.clear()
+  def track(df: DataFrame): Unit = {
+    val tracked = current.get
+    if (tracked != null) tracked += df
   }
 }

@@ -163,9 +163,8 @@ object Corpus {
     * doc_id sum. The corpus token total is ONE broadcast row; the
     * LM-to-doc join is 1:N on the token key, no amplification. The
     * per-doc count table and the LM each feed two consumers, so both
-    * ride the shared registry ([[Dedup.caches]] — released by the
-    * harnesses between queries) instead of being recomputed per
-    * consumer (the before-plan ran the tokenize+explode subtree three
+    * are materialized through [[CacheRegistry]] (released by the
+    * caller's scope) instead of being recomputed per consumer (the before-plan ran the tokenize+explode subtree three
     * times and the LM aggregate twice).
     */
   def unigramNll(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
@@ -191,7 +190,7 @@ object Corpus {
         }
       })
       .toDF("doc_id", "tok", "c")
-    val lm = Dedup.caches.materialize(
+    val lm = CacheRegistry.materialize(
       dt.groupBy("tok").agg(sum("c").as("tf")))
     val total = lm.agg(sum("tf").as("n_total"))
     dt.join(lm, "tok")

@@ -25,35 +25,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Recoverability contract for corpus-sized multi-consumer
-    * intermediates (shingle/token/bucket tables): see [[CacheRegistry]]
-    * — persist(MEMORY_AND_DISK) + eager count, never localCheckpoint.
-    * Dedup's operators share one object-level registry because their
-    * caller contract is sequential (run operator → consume → call
-    * `releaseCaches()`); a long-lived session (bench loops, notebook
-    * use) calls `releaseCaches()` between runs so repeated dedup calls
-    * cannot accumulate cached blocks until eviction pressure
-    * (round-5 ADVICE). The sequential contract is load-bearing: two
-    * CONCURRENT jobs in one session must not share this instance (one
-    * job's release would unpersist the other's in-flight tables) —
-    * concurrent callers should take the parameterized-registry shape
-    * instead ([[Bloom.membershipJoin]]'s `caches` param,
-    * StreamExtract's per-micro-batch instance).
-    */
-  // private[operators]: Similarity/Corpus ride the SAME registry (their
-  // operators share Dedup's sequential caller contract, and the bench /
-  // verify harnesses release exactly this registry between queries)
-  private[operators] val caches = new CacheRegistry
-
-  private def materialize(df: DataFrame): DataFrame = caches.materialize(df)
-
-  /** Unpersist every table a Dedup operator materialized. Call after
-    * the consuming action completes (results already computed or
-    * themselves persisted) — a still-lazy downstream plan would
-    * recompute its inputs from lineage, correct but slow.
-    */
-  def releaseCaches(): Unit = caches.releaseAll()
-
   /** Exact duplicate groups: one row per distinct normalized text.
     * (keep = min doc id, n = group size).
     */
@@ -93,10 +64,10 @@ object Dedup {
     *      string shingle sets with the exact kernel, so the output is
     *      bit-exact regardless of hash collisions.
     *
-    * Materializes a corpus-sized shingle table (persist, tracked —
-    * see the contract at the top of this object): long-lived sessions
-    * call [[releaseCaches]] after the consuming action, or repeated
-    * calls accumulate cached blocks.
+    * Materializes a corpus-sized shingle table through
+    * [[CacheRegistry]]: run the consuming action inside
+    * [[CacheRegistry.scoped]], or repeated calls accumulate cached
+    * blocks.
     */
   def jaccardPairs(docs: DataFrame, textCol: String, idCol: String,
       n: Int = 3, minJ: Double = 0.5): DataFrame = {
@@ -107,11 +78,11 @@ object Dedup {
     // verified by the DuckDB oracle on this exact operator); ids pass
     // through as strings and are cast back to their original type below.
     // Materialized ONCE under the recoverability contract (persist +
-    // eager count, see `materialize`): five consumers read this table
+    // eager count, see CacheRegistry): five consumers read this table
     // (prefix explode, two hash-screen joins, two exact-verify joins) —
     // without it each one re-runs the tokenize+shingle+hash kernel over
     // the whole corpus, five scans instead of one at 10^9 docs
-    val sh = materialize(docs
+    val sh = CacheRegistry.materialize(docs
       .select(col(idCol).cast("string").as("doc_id"),
         tokens(col(textCol)).as("t"))
       .as[(String, Seq[String])]
@@ -178,7 +149,7 @@ object Dedup {
     // window subtree (measured: two Exchange(g) + two Window(doc_id)
     // pairs in the r06 before-plan, i.e. the candidate stage computed
     // twice; at 10^9 docs that is two extra corpus-wide shuffles)
-    val prefix = materialize((if (prefixFilter)
+    val prefix = CacheRegistry.materialize((if (prefixFilter)
       // the 1e-9 guard keeps IEEE noise (0.07*100 = 7.000000000000001)
       // from rounding the ceiling UP past the true integer product and
       // shortening the prefix below what the recall theorem requires;
@@ -212,7 +183,7 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     val idType = docs.schema(idCol).dataType
-    val sh = materialize(docs
+    val sh = CacheRegistry.materialize(docs
       .select(col(idCol).cast("string").as("doc_id"),
         tokens(col(textCol)).as("t"))
       .as[(String, Seq[String])]
@@ -281,9 +252,8 @@ object Dedup {
     * (id_a < id_b) and returned id types follow the ORIGINAL id column
     * type (same contract as jaccardPairs, so d2/d3 outputs join cleanly).
     *
-    * Materializes a corpus-sized token table (persist, tracked — see
-    * the contract at the top of this object): long-lived sessions call
-    * [[releaseCaches]] after the consuming action.
+    * Materializes a corpus-sized token table through [[CacheRegistry]]
+    * (released by the caller's [[CacheRegistry.scoped]] block).
     */
   def minhashNearDups(docs: DataFrame, textCol: String, idCol: String,
       n: Int = 3, perms: Int = 64, bands: Int = 16,
@@ -293,8 +263,8 @@ object Dedup {
     val idType = docs.schema(idCol).dataType
     // materialized once (three consumers: banding scan + the two
     // candidate verify joins) under the same recoverability contract as
-    // jaccardPairs' shingle table — see `materialize`
-    val tokenized = materialize(docs
+    // jaccardPairs' shingle table — see CacheRegistry
+    val tokenized = CacheRegistry.materialize(docs
       .select(col(idCol).cast("string").as("doc_id"),
         tokens(col(textCol)).as("t"))
       .as[(String, Seq[String])]
@@ -309,7 +279,8 @@ object Dedup {
     // band table is rows-per-doc-bounded and its candidate volume is
     // small by design, so the join's own exchanges are cheaper than an
     // extra materialized shuffle (measured on sf0.1).
-    val banded = materialize(minhashBandRows(tokenized, n, perms, bands))
+    val banded =
+      CacheRegistry.materialize(minhashBandRows(tokenized, n, perms, bands))
     // pair ordering on the NATIVE id type — string compare would order
     // ("10" < "2") and silently disagree with jaccardPairs on numeric ids
     val cand = banded.as("a").join(banded.as("b"),
@@ -556,7 +527,7 @@ object Dedup {
       // cache eagerly before any of them can race — but unlike
       // checkpoint blocks, a persisted partition lost with its executor
       // recomputes from lineage (depth-bounded here) instead of killing
-      // the job. Same reasoning as `materialize` / M2PayloadStorage.
+      // the job. Same reasoning as CacheRegistry / M2PayloadStorage.
       val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       // every per-level persist is collected here and dropped before
       // returning (round-5 ADVICE: repeated d4/skew runs in one session
@@ -600,9 +571,9 @@ object Dedup {
       if (done.isEmpty) {
         // no oversize bucket: the level-0 frontier IS the result and is
         // already fully cached by the over.count() scan — keep only it
-        // alive (registered for releaseCaches) and drop the empty-over
+        // alive (tracked in the caller's scope) and drop the empty-over
         // helper persists
-        caches.track(frontier)
+        CacheRegistry.track(frontier)
         perLevel.filter(_ ne frontier).foreach(_.unpersist())
         frontier
       } else {
@@ -613,9 +584,9 @@ object Dedup {
         // caches directly (the anti-join parts re-derive per read, but
         // both their inputs — frontier and the oversize list — are
         // cached, so no kernel or shuffle recomputes). The level caches
-        // are tracked for the harness's releaseCaches instead of being
-        // dropped here, since the returned plan reads them lazily.
-        perLevel.foreach(caches.track)
+        // are tracked in the caller's scope instead of being dropped
+        // here, since the returned plan reads them lazily.
+        perLevel.foreach(CacheRegistry.track)
         done.foldLeft(frontier)(_ union _)
       }
     }
@@ -641,8 +612,7 @@ object Dedup {
     * hamming filter).
     *
     * With maxBucket > 0, simhashBuckets persists its re-split
-    * frontiers (tracked): long-lived sessions call [[releaseCaches]]
-    * after the consuming action.
+    * frontiers, tracked in the caller's [[CacheRegistry.scoped]] block.
     */
   def simhashNearDups(docs: DataFrame, textCol: String, idCol: String,
       maxHamming: Int = 3, maxBucket: Int = 0, maxDepth: Int = 3): DataFrame =
@@ -656,68 +626,18 @@ object Dedup {
   private def udfFreeHamming(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
 
-  /** Near-duplicate CLUSTERS from a pair table (id_a, id_b): connected
-    * components by min-label propagation — every doc appearing in a
-    * pair gets cluster_id = the smallest doc id reachable through dup
-    * edges (the canonical representative a dedup pipeline keeps).
-    *
-    * Each round propagates labels across edges and keeps the min; the
-    * label sequence is monotone non-increasing and bounded, so it
-    * converges in O(log diameter) rounds: each round propagates over
-    * edges AND pointer-jumps through the label table
-    * (label := label(label)), halving chain depth — so even a
-    * 10^6-long revision chain converges within the iteration bound.
-    * localCheckpoint truncates the iterative lineage (the standard
-    * Spark pattern for loops); at extreme edge counts switch to the
-    * large-star/small-star variant (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC 2014 — public) which
-    * bounds per-round edge duplication.
-    */
-  def dupClusters(pairs: DataFrame, maxIters: Int = 64): DataFrame = {
-    val edges = pairs
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = edges.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIters) {
-      val prop = edges.join(labels, edges("src") === labels("v"))
-        .select(col("dst").as("v"), col("label"))
-        .union(labels.select(col("v"), col("label")))
-        .groupBy("v").agg(min("label").as("label"))
-        .localCheckpoint(true) // also de-ambiguates the self-join below
-      // pointer jumping: follow one more hop through the label table so
-      // convergence is O(log diameter), not O(diameter)
-      val parent = prop.select(col("v").as("pv"), col("label").as("plabel"))
-      val next = prop.join(parent, col("label") === col("pv"), "left")
-        .select(col("v"),
-          least(col("label"), coalesce(col("plabel"), col("label")))
-            .as("label"))
-        .localCheckpoint(true)
-      changed = next.as("n").join(labels.as("o"), col("n.v") === col("o.v"))
-        .filter(col("n.label") =!= col("o.label")).count()
-      labels = next
-      iter += 1
-    }
-    require(changed == 0, s"dupClusters did not converge in $maxIters rounds")
-    labels.select(col("v").as("doc_id"), col("label").as("cluster_id"))
-  }
-
   /** Connected components via the ALTERNATING large-star/small-star
     * algorithm (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC 2014 — public): same output contract as dupClusters
-    * (every doc in a pair → cluster_id = min reachable id, minima map
-    * to themselves), but each round's output is BOUNDED — large-star
-    * emits one edge per (node, larger-neighbor) and small-star one per
-    * (node, smaller-neighbor), so per-round edge volume never exceeds
-    * the current edge count, where label propagation's join can fan a
+    * Beyond", SoCC 2014 — public): near-duplicate CLUSTERS of a pair
+    * table (id_a, id_b). Every doc in a pair gets cluster_id = the
+    * smallest doc id reachable through dup edges (the canonical
+    * representative a dedup pipeline keeps); minima map to themselves.
+    * Each round's output is BOUNDED — large-star emits one edge per
+    * (node, larger-neighbor) and small-star one per (node,
+    * smaller-neighbor), so per-round edge volume never exceeds the
+    * current edge count, where min-label propagation's join can fan a
     * high-degree node's label into every neighbor list each round.
-    * This is the variant for extreme edge counts (10^9+ pair tables);
-    * converges in O(log n) rounds.
+    * Converges in O(log n) rounds, also on 10^9+ pair tables.
     *
     * Invariant: edges stay canonically oriented u > v. Large-star hangs
     * every larger neighbor v of u under m = min(N(u) ∪ {u}); small-star
@@ -782,9 +702,8 @@ object Dedup {
     * clustering and anti-join stages are shared.
     *
     * Via jaccardPairs this materializes tracked corpus-sized tables:
-    * long-lived sessions call [[releaseCaches]] after the consuming
-    * action (the returned kept-docs frame is itself lazy — run or
-    * persist it FIRST, then release).
+    * the returned kept-docs frame is itself lazy, so run or persist it
+    * INSIDE the caller's [[CacheRegistry.scoped]] block.
     */
   def dedupCorpus(docs: DataFrame, textCol: String, idCol: String,
       n: Int = 3, minJ: Double = 0.5,
@@ -830,7 +749,7 @@ object Dedup {
     // the gram table feeds two consumers (the dup-count aggregate and
     // the coverage join) — tracked materialization per the file's
     // recoverability contract, so the corpus is tokenized+exploded ONCE
-    val g = materialize(docs.select(col(idCol).as("doc_id"),
+    val g = CacheRegistry.materialize(docs.select(col(idCol).as("doc_id"),
       posexplode(graft.functions.TextFunctions.orderedGrams(col(textCol), n))
         .as(Seq("s", "gram"))))
     val dup = g.groupBy("gram").agg(count(lit(1)).as("cnt"))

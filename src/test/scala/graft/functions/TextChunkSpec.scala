@@ -1,18 +1,50 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** tokenChunks: closed-form window arithmetic, overlap, and the ragged
-  * edge cases the real-corpus oracle may not sample.
+/** Token-window chunking (c1-c3): closed-form window arithmetic,
+  * overlap, and the ragged edge cases the real-corpus oracle may not
+  * sample, over the Catalyst reference form; the JIT kernel the queries
+  * run is pinned row-for-row against that reference.
   */
 class TextChunkSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
 
+  /** Reference form of TextFunctions.tokenChunksKernel as a pure
+    * generator-side Catalyst expression (split → sequence → transform →
+    * slice): an array of (chunk_idx, n_tok, chunk) structs the caller
+    * explodes. The window arithmetic below is the specification the
+    * kernel is pinned against.
+    */
+  private def tokenChunks(c: Column, maxTok: Int, stride: Int,
+      withText: Boolean = true): Column = {
+    require(maxTok >= 1 && stride >= 1 && stride <= maxTok,
+      "need 1 <= stride <= maxTok")
+    val toks = split(trim(c), "\\s+")
+    val t = size(toks)
+    val n = when(t <= maxTok, lit(1))
+      .otherwise(ceil((t - maxTok).cast("double") / stride).cast("int")
+        + lit(1))
+    // consumers that only need the window grid (e.g. packing) skip the
+    // chunk strings entirely: the field is built inside this lambda, so
+    // generator pruning cannot remove it after the fact
+    transform(sequence(lit(0), n - 1), i => {
+      val idx = i.as("chunk_idx")
+      val nt = least(lit(maxTok), t - i * stride).as("n_tok")
+      if (withText)
+        struct(idx, nt,
+          array_join(slice(toks, i * stride + 1, lit(maxTok)), " ")
+            .as("chunk"))
+      else struct(idx, nt)
+    })
+  }
+
   private def chunksOf(text: String, maxTok: Int = 32, stride: Int = 24) = {
     import spark.implicits._
     Seq(Tuple1(text)).toDF("text")
-      .select(explode(TextFunctions.tokenChunks($"text", maxTok, stride))
+      .select(explode(tokenChunks($"text", maxTok, stride))
         .as("c"))
       .select($"c.chunk_idx", $"c.n_tok", $"c.chunk")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getString(2)))
@@ -133,7 +165,7 @@ class TextChunkSpec extends AnyFunSuite {
   test("null text propagates to a null array (caller filters)") {
     import spark.implicits._
     val n = Seq(Tuple1(null: String)).toDF("text")
-      .select(explode(TextFunctions.tokenChunks($"text", 32, 24)).as("c"))
+      .select(explode(tokenChunks($"text", 32, 24)).as("c"))
       .count()
     assert(n == 0L) // explode of null emits no rows
   }
@@ -156,7 +188,7 @@ class TextChunkSpec extends AnyFunSuite {
       val viaExpr = texts.zipWithIndex.map { case (t, i) => (i, t) }
         .toDF("id", "text")
         .select($"id",
-          explode(TextFunctions.tokenChunks($"text", maxTok, stride))
+          explode(tokenChunks($"text", maxTok, stride))
             .as("c"))
         .select($"id", $"c.chunk_idx", $"c.n_tok", $"c.chunk")
         .as[(Int, Int, Int, String)].collect().toSeq.sorted

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.TestSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +20,54 @@ class DedupSpec extends AnyFunSuite {
       (4L, unrelated1), (5L, unrelated2),
       (6L, unrelated1 + " extra tail words appended here")
     ).toDF("doc_id", "text")
+  }
+
+  /** Reference clustering for Dedup.dupClustersLargeStar: connected
+    * components of a pair table (id_a, id_b) by min-label propagation —
+    * every doc appearing in a pair gets cluster_id = the smallest doc id
+    * reachable through dup edges.
+    *
+    * Each round propagates labels across edges and keeps the min; the
+    * label sequence is monotone non-increasing and bounded, so it
+    * converges in O(log diameter) rounds: each round propagates over
+    * edges AND pointer-jumps through the label table
+    * (label := label(label)), halving chain depth — so even a
+    * 10^6-long revision chain converges within the iteration bound.
+    * localCheckpoint truncates the iterative lineage (the standard
+    * Spark pattern for loops).
+    */
+  private def dupClusters(pairs: DataFrame, maxIters: Int = 64): DataFrame = {
+    val edges = pairs
+      .select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .distinct()
+      .localCheckpoint(true)
+    var labels = edges.select(col("src").as("v")).distinct()
+      .withColumn("label", col("v"))
+      .localCheckpoint(true)
+    var changed = 1L
+    var iter = 0
+    while (changed > 0 && iter < maxIters) {
+      val prop = edges.join(labels, edges("src") === labels("v"))
+        .select(col("dst").as("v"), col("label"))
+        .union(labels.select(col("v"), col("label")))
+        .groupBy("v").agg(min("label").as("label"))
+        .localCheckpoint(true) // also de-ambiguates the self-join below
+      // pointer jumping: follow one more hop through the label table so
+      // convergence is O(log diameter), not O(diameter)
+      val parent = prop.select(col("v").as("pv"), col("label").as("plabel"))
+      val next = prop.join(parent, col("label") === col("pv"), "left")
+        .select(col("v"),
+          least(col("label"), coalesce(col("plabel"), col("label")))
+            .as("label"))
+        .localCheckpoint(true)
+      changed = next.as("n").join(labels.as("o"), col("n.v") === col("o.v"))
+        .filter(col("n.label") =!= col("o.label")).count()
+      labels = next
+      iter += 1
+    }
+    require(changed == 0, s"dupClusters did not converge in $maxIters rounds")
+    labels.select(col("v").as("doc_id"), col("label").as("cluster_id"))
   }
 
   test("exact dedup groups identical normalized text") {
@@ -73,7 +122,7 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     // chain 1-2-3 plus isolated pair 10-7 (order-insensitive)
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 7L)).toDF("id_a", "id_b")
-    val got = Dedup.dupClusters(pairs).collect()
+    val got = dupClusters(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 10L -> 7L))
   }
@@ -216,7 +265,7 @@ class DedupSpec extends AnyFunSuite {
       df.select("doc_id", "cluster_id").as[(Long, Long)].collect().toSet
     def check(pairs: Seq[(Long, Long)], hint: String): Unit = {
       val df = pairs.toDF("id_a", "id_b")
-      val prop = clustersOf(Dedup.dupClusters(df))
+      val prop = clustersOf(dupClusters(df))
       val star = clustersOf(Dedup.dupClustersLargeStar(df))
       assert(star == prop, s"$hint: star=$star prop=$prop")
     }
@@ -233,7 +282,7 @@ class DedupSpec extends AnyFunSuite {
       .filter(p => p._1 != p._2), "random-120")
     // the golden dedup corpus end to end
     val pairs = Dedup.jaccardPairs(corpus(), "text", "doc_id", 3, 0.5)
-    val prop = clustersOf(Dedup.dupClusters(pairs))
+    val prop = clustersOf(dupClusters(pairs))
     val star = clustersOf(Dedup.dupClustersLargeStar(pairs))
     assert(star == prop && star.nonEmpty)
     // empty pair table → empty clustering, no crash

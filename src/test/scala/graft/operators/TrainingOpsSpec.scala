@@ -111,10 +111,11 @@ class TrainingOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val n = graft.SparkEntry.D8Gram
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val got = Dedup.duplicatedSpanStats(docs, "text", "doc_id", n)
-      .orderBy("doc_id").collect()
-      .map(r0 => (r0.getLong(0), r0.getInt(1), r0.getLong(2), r0.getDouble(3)))
-    Dedup.releaseCaches()
+    val got = CacheRegistry.scoped {
+      Dedup.duplicatedSpanStats(docs, "text", "doc_id", n)
+        .orderBy("doc_id").collect()
+        .map(r0 => (r0.getLong(0), r0.getInt(1), r0.getLong(2), r0.getDouble(3)))
+    }
     val g = docs.select(col("doc_id"),
       posexplode(graft.functions.TextFunctions.orderedGrams(col("text"), n))
         .as(Seq("s", "gram")))

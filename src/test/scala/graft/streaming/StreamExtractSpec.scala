@@ -3,6 +3,7 @@ package graft.streaming
 import graft.{Job, TestSpark}
 import graft.data.CorpusGen
 import graft.model._
+import graft.operators.CacheRegistry
 import graft.snapshot.SnapshotStore
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
@@ -76,44 +77,87 @@ class StreamExtractSpec extends AnyFunSuite {
     assert(!ids.contains("dup-of-0"))
     assert(ids.contains(goldens(10).input.doc_id))
 
-    // near-dup probe layer (batch API over the same store): a row one
-    // appended token away from a committed doc's content is caught by
-    // the band probe + exact-Jaccard verify; an unrelated row survives
-    val base = table.as[ExtractedDoc].collect()
-      .maxBy(_.spans.map(s => Option(s.text).map(_.length).getOrElse(0)).sum)
-    val nearSpans = base.spans.zipWithIndex.map { case (sp, i) =>
-      if (i == 0) sp.copy(text = sp.text + " zzz") else sp
-    }
-    val batch = Seq(
-      ExtractedDoc("near-dup", nearSpans, nearSpans.size, true, null),
-      ExtractedDoc("fresh",
-        Seq(OutSpan("html", "completely different words entirely", null, 0)),
-        1, true, null)).toDS()
-    val out = StreamExtract.dedupAgainstSnapshot(batch,
-        new SnapshotStore(storeRoot), nearDup = true, minJ = 0.5)
-      .select($"doc_id").as[String].collect().toSet
-    assert(out == Set("fresh"), out.mkString(","))
+    // the batch API outside a stream: one cache scope releases the
+    // probes' materialized committed-corpus tables
+    CacheRegistry.scoped {
+      // near-dup probe layer (batch API over the same store): a row one
+      // appended token away from a committed doc's content is caught by
+      // the band probe + exact-Jaccard verify; an unrelated row survives
+      val base = table.as[ExtractedDoc].collect()
+        .maxBy(_.spans.map(s => Option(s.text).map(_.length).getOrElse(0)).sum)
+      val nearSpans = base.spans.zipWithIndex.map { case (sp, i) =>
+        if (i == 0) sp.copy(text = sp.text + " zzz") else sp
+      }
+      val batch = Seq(
+        ExtractedDoc("near-dup", nearSpans, nearSpans.size, true, null),
+        ExtractedDoc("fresh",
+          Seq(OutSpan("html", "completely different words entirely", null, 0)),
+          1, true, null)).toDS()
+      val out = StreamExtract.dedupAgainstSnapshot(batch,
+          new SnapshotStore(storeRoot), nearDup = true, minJ = 0.5)
+        .select($"doc_id").as[String].collect().toSet
+      assert(out == Set("fresh"), out.mkString(","))
 
-    // Bloom pre-filter parity: with the bitset probe routing arrivals
-    // around the anti-join, survivors must be IDENTICAL — a replayed
-    // exact duplicate of committed content is still dropped (it hits
-    // the filter and loses the exact join) and a fresh doc still
-    // survives (whether it missed the filter or won the join)
-    val exactDup = table.as[ExtractedDoc].collect().head
-      .copy(doc_id = "bloom-dup")
-    val bloomBatch = Seq(exactDup,
-      ExtractedDoc("bloom-fresh",
-        Seq(OutSpan("html", "unseen bloom probe content", null, 0)),
-        1, true, null)).toDS()
-    val plain = StreamExtract.dedupAgainstSnapshot(bloomBatch,
-        new SnapshotStore(storeRoot))
-      .select($"doc_id").as[String].collect().toSet
-    val bloomed = StreamExtract.dedupAgainstSnapshot(bloomBatch,
-        new SnapshotStore(storeRoot), bloomPrefilter = true)
-      .select($"doc_id").as[String].collect().toSet
-    assert(plain == Set("bloom-fresh"), plain.mkString(","))
-    assert(bloomed == plain, bloomed.mkString(","))
-    StreamExtract.releaseBatchCaches()
+      // Bloom pre-filter parity: with the bitset probe routing arrivals
+      // around the anti-join, survivors must be IDENTICAL — a replayed
+      // exact duplicate of committed content is still dropped (it hits
+      // the filter and loses the exact join) and a fresh doc still
+      // survives (whether it missed the filter or won the join)
+      val exactDup = table.as[ExtractedDoc].collect().head
+        .copy(doc_id = "bloom-dup")
+      val bloomBatch = Seq(exactDup,
+        ExtractedDoc("bloom-fresh",
+          Seq(OutSpan("html", "unseen bloom probe content", null, 0)),
+          1, true, null)).toDS()
+      val plain = StreamExtract.dedupAgainstSnapshot(bloomBatch,
+          new SnapshotStore(storeRoot))
+        .select($"doc_id").as[String].collect().toSet
+      val bloomed = StreamExtract.dedupAgainstSnapshot(bloomBatch,
+          new SnapshotStore(storeRoot), bloomPrefilter = true)
+        .select($"doc_id").as[String].collect().toSet
+      assert(plain == Set("bloom-fresh"), plain.mkString(","))
+      assert(bloomed == plain, bloomed.mkString(","))
+    }
+  }
+
+  /** A store written only by extractStream(dedupCommitted): batch 0
+    * commits 6 docs, batch 1 brings 2 new docs plus an exact duplicate
+    * of a committed doc, which the dedup drops before the write.
+    */
+  private lazy val streamOnlyStore: SnapshotStore = {
+    import spark.implicits._
+    val in = Files.createTempDirectory("graft-manifest-in").toString
+    val root = Files.createTempDirectory("graft-manifest-store").toString
+    val ckpt = Files.createTempDirectory("graft-manifest-ckpt").toString
+    val goldens = CorpusGen.goldens(8).map(_.input)
+    def drain(docs: Seq[Doc]): Unit = {
+      docs.toDS().coalesce(1).write.mode("append").parquet(in)
+      StreamExtract.extractStream(spark, in, root, ckpt,
+        ExtractConfig(partitions = 4), dedupCommitted = true)
+        .awaitTermination()
+    }
+    drain(goldens.take(6))
+    drain(goldens.drop(6) :+ goldens.head.copy(doc_id = "dup-of-0"))
+    new SnapshotStore(root)
+  }
+
+  test("a stream-only store tracks the schema of the rows it wrote") {
+    val store = streamOnlyStore
+    assert(store.committedBuckets.size == 2)
+    val tracked = store.schemaAt()
+    assert(tracked.nonEmpty, "the stream's commits recorded no schema")
+    val data = spark.read.parquet(store.dataPaths(): _*)
+    assert(org.apache.spark.sql.types.DataType.fromJson(tracked.get)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+      .fieldNames.toSeq == data.columns.toSeq)
+  }
+
+  test("the manifest doc count is the rows written after dedup") {
+    val store = streamOnlyStore
+    val rows = Job.readData(spark, store).count()
+    assert(rows == 8L) // 6 + 2 new; the duplicate never reached the table
+    assert(store.latest.get.buckets.map(_.docs).sum == rows,
+      store.latest.get.buckets.mkString(", "))
   }
 
   test("watermarked sliding-window aggregation over events") {
